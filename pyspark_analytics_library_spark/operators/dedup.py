@@ -1049,15 +1049,6 @@ def _cc_loop(
     sym, drop_sym_table = _cc_materialize_sym(
         spark, sym, scratch_root, big_edges=big_edges
     )
-    # Labels start from the EDGE-INCIDENT vertex set only (derived from
-    # the materialized edges — no extra pass over the caller's plan);
-    # singletons rejoin in connected_components via _attach_singletons.
-    # sym carries both directions, so src alone covers every endpoint.
-    verts_e = sym.select(F.col("src").alias("v")).distinct()
-    lab = _cc_checkpoint(
-        verts_e.select(F.col("v"), F.col("v").alias("label")), scratch_root, 0
-    )
-
     # One round per materialization.  (A GraphFrames-style
     # checkpointInterval=2 — two lazy rounds per write — was measured
     # SLOWER here: the mid-round joins plan against unmaterialized
@@ -1075,6 +1066,18 @@ def _cc_loop(
 
     changed = 0
     try:
+        # Labels start from the EDGE-INCIDENT vertex set only (derived
+        # from the materialized edges — no extra pass over the caller's
+        # plan); singletons rejoin in connected_components via
+        # _attach_singletons.  sym carries both directions, so src alone
+        # covers every endpoint.  Inside the try: a failed round-0
+        # checkpoint must still drop the sym catalog table.
+        verts_e = sym.select(F.col("src").alias("v")).distinct()
+        lab = _cc_checkpoint(
+            verts_e.select(F.col("v"), F.col("v").alias("label")),
+            scratch_root,
+            0,
+        )
         for round_no in range(1, max_iters + 1):
             start = lab.select(
                 "v", "label", F.col("label").alias("base_label")

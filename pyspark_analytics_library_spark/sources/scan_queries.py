@@ -21,7 +21,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pyspark_analytics_library_spark.registry import query
-from pyspark_analytics_library_spark.sources import commit as commit_mod
 from pyspark_analytics_library_spark.sources import io as io_mod
 from pyspark_analytics_library_spark.sources.io import load_tables
 
@@ -71,11 +70,8 @@ def _merge_target(name: str) -> str:
 
 def _staged_overwrite(df: DataFrame, target: str) -> str:
     """Crash-safe parquet overwrite (VERDICT r13 #4); returns the path
-    readers should scan.  Two protocols, selected by the conf
-    ``spark.analytics.sink.commitMode``:
-
-    ``rename`` (default): write the new table to
-    ``<target>.staging-<uuid>``, then swap it in with filesystem
+    readers should scan (``target``).  Writes the new table to
+    ``<target>.staging-<uuid>``, then swaps it in with filesystem
     renames, so a failure at ANY point leaves the previous target
     readable instead of half-written:
 
@@ -94,23 +90,12 @@ def _staged_overwrite(df: DataFrame, target: str) -> str:
 
     POSIX ``rename`` within one filesystem is atomic, which covers
     local/HDFS deployments; on object stores (S3A et al.) "rename" is
-    copy+delete and this protocol does NOT buy atomicity there.
-
-    ``manifest``: the object-store-safe protocol —
-    :func:`~pyspark_analytics_library_spark.sources.commit.manifest_commit`
-    writes a new GENERATION dir under the target and commits by
-    atomically swapping one small ``_CURRENT`` pointer file (a
-    single-object PUT on a store, ``os.replace`` locally); readers
-    resolve through :func:`...commit.resolve_table` and never observe
-    a partial table, with no reliance on directory rename at all
-    (VERDICT r14 #4; tests/test_merge_safety.py simulates the
-    crash-between windows and forbids data-dir renames outright).
+    copy+delete and this protocol does NOT buy atomicity there — the
+    per-file manifest tables in
+    :mod:`~pyspark_analytics_library_spark.sources.commit` are the
+    object-store-safe write path (one atomic pointer-file swap, no
+    directory rename).
     """
-    mode = df.sparkSession.conf.get(commit_mod.MODE_CONF, "rename")
-    if mode == "manifest":
-        return commit_mod.manifest_commit(df, target)
-    if mode != "rename":
-        raise ValueError(f"unknown {commit_mod.MODE_CONF}: {mode!r}")
     staging = f"{target}.staging-{uuid.uuid4().hex[:8]}"
     try:
         df.write.mode("overwrite").parquet(staging)
@@ -557,24 +542,10 @@ def q_sink_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    path = _merge_target("sink_merge")
-    if spark.conf.get(commit_mod.MODE_CONF, "rename") == "manifest":
-        # Per-FILE manifest path (VERDICT r15 #2): seed the base as a
-        # bucketed manifest table (the one unavoidable full write —
-        # idempotent per run), then apply the update batch as an
-        # INCREMENTAL merge commit that rewrites only the buckets the
-        # batch touches and carries every other data file by
-        # reference — at 100 TB write amplification scales with the
-        # update footprint, not the table.  Identical output to the
-        # rename path (same merge core, same oracle), pinned by
-        # tests/test_merge_safety.py's strict-subset + equivalence
-        # tests.
-        commit_mod.table_init(base, path, "o_orderkey")
-        commit_mod.table_merge(spark, path, updates, scd1_merged)
-        merged_read = commit_mod.table_read(spark, path)
-    else:
-        merged = scd1_merged(base, updates)
-        merged_read = spark.read.parquet(_staged_overwrite(merged, path))
+    merged = scd1_merged(base, updates)
+    merged_read = spark.read.parquet(
+        _staged_overwrite(merged, _merge_target("sink_merge"))
+    )
     return (
         merged_read
         .groupBy("o_orderstatus")
@@ -597,11 +568,7 @@ def _SCD2_EFF_DATE() -> Column:
 
 
 def _scd2_update_batch(orders: DataFrame) -> DataFrame:
-    """The ONE spelling of the SCD-2 update batch (review r16: this
-    recipe previously lived hand-synchronized in scd2_history, the
-    manifest branch of q_sink_merge_scd2, and the oracle SQL — a drift
-    surface where editing one spelling would silently diverge the
-    others).  Columns: o_orderkey, o_orderstatus, o_totalprice,
+    """The SCD-2 update batch.  Columns: o_orderkey, o_orderstatus, o_totalprice,
     valid_from.  Same %97 update / %101 insert predicates, floor-based
     half-up price rounding, and collision-free insert offset the
     oracle states."""
@@ -670,50 +637,6 @@ def scd2_history(orders: DataFrame) -> DataFrame:
         "valid_from",
         F.when(superseded, eff).alias("valid_to"),
         (~superseded).alias("is_current"),
-    )
-
-
-def scd2_apply(base_hist: DataFrame, updates: DataFrame) -> DataFrame:
-    """Incremental SCD-2 merge core: apply an update batch to an
-    EXISTING history table (the :func:`scd2_history` schema —
-    ``valid_from``/``valid_to``/``is_current``), closing out each
-    updated key's CURRENT row at the update's ``valid_from`` and
-    appending the update as the new open row.
-
-    This is the per-slice form :func:`~pyspark_analytics_library_spark.
-    sources.commit.table_merge` needs — ``base_hist`` may be just the
-    touched-bucket slice of the table; correctness needs only that
-    every updated key's rows are present, which bucket routing
-    guarantees.  On a whole all-open base it reduces exactly to
-    :func:`scd2_history`'s union+window result (pinned equivalent by
-    the sink_merge_scd2 oracle under commitMode=manifest).  Same ONE
-    window / zero joins discipline: ``max(is_update)`` per key flags
-    supersession, the close-out date is the per-key max update
-    ``valid_from`` — pure CASE expressions, one shuffle on the merge
-    key."""
-    from pyspark.sql import Window
-
-    u_hist = updates.select(
-        "o_orderkey",
-        "o_orderstatus",
-        "o_totalprice",
-        "valid_from",
-        F.lit(None).cast("date").alias("valid_to"),
-        F.lit(True).alias("is_current"),
-        F.lit("u").alias("_src"),
-    )
-    allr = base_hist.withColumn("_src", F.lit("b")).unionByName(u_hist)
-    w = Window.partitionBy("o_orderkey")
-    has_upd = F.max((F.col("_src") == "u").cast("int")).over(w)
-    eff = F.max(F.when(F.col("_src") == "u", F.col("valid_from"))).over(w)
-    superseded = (F.col("_src") == "b") & (has_upd == 1) & F.col("is_current")
-    return allr.select(
-        "o_orderkey",
-        "o_orderstatus",
-        "o_totalprice",
-        "valid_from",
-        F.when(superseded, eff).otherwise(F.col("valid_to")).alias("valid_to"),
-        (F.col("is_current") & ~superseded).alias("is_current"),
     )
 
 
@@ -786,28 +709,9 @@ def q_sink_merge_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`_insert_key_offset` collision-free insert keys as SCD-1.
     """
     orders = load_tables(spark, sf_dir)["orders"]
-    path = _merge_target("sink_merge_scd2")
-    if spark.conf.get(commit_mod.MODE_CONF, "rename") == "manifest":
-        # Per-FILE manifest path (VERDICT r15 #2): seed the all-open
-        # base history, then ONE incremental close-out commit via
-        # :func:`scd2_apply` — only buckets containing updated keys
-        # are rewritten; the untouched history files are carried by
-        # reference.  See q_sink_merge_upsert's manifest comment.
-        base_hist = orders.select(
-            "o_orderkey",
-            "o_orderstatus",
-            "o_totalprice",
-            F.lit("1990-01-01").cast("date").alias("valid_from"),
-            F.lit(None).cast("date").alias("valid_to"),
-            F.lit(True).alias("is_current"),
-        )
-        updates = _scd2_update_batch(orders)
-        commit_mod.table_init(base_hist, path, "o_orderkey")
-        commit_mod.table_merge(spark, path, updates, scd2_apply)
-        hist_read = commit_mod.table_read(spark, path)
-    else:
-        hist = scd2_history(orders)
-        hist_read = spark.read.parquet(_staged_overwrite(hist, path))
+    hist_read = spark.read.parquet(
+        _staged_overwrite(scd2_history(orders), _merge_target("sink_merge_scd2"))
+    )
     return (
         hist_read
         .groupBy("o_orderstatus", "is_current")

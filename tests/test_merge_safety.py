@@ -135,125 +135,13 @@ def test_scd2_null_key_base_rows_stay_open(spark):
 
 
 # ---------------------------------------------------------------------------
-# Manifest-pointer commit mode (VERDICT r14 #4): the object-store-safe
-# protocol — commit = one atomic small-file pointer swap, never a
+# Per-file manifest tables (the v2 ``table_*`` API): the object-store-safe
+# write path — commit = one atomic small-file pointer swap, never a
 # directory rename.  These tests simulate the crash windows and forbid
 # directory renames outright.
 # ---------------------------------------------------------------------------
 
 from pyspark_analytics_library_spark.sources import commit as commit_mod
-
-
-@pytest.fixture
-def manifest_mode(spark):
-    prev = spark.conf.get(commit_mod.MODE_CONF, None)
-    spark.conf.set(commit_mod.MODE_CONF, "manifest")
-    yield
-    if prev is None:
-        spark.conf.unset(commit_mod.MODE_CONF)
-    else:
-        spark.conf.set(commit_mod.MODE_CONF, prev)
-
-
-def _read_current(spark, target):
-    return sorted(
-        r["k"]
-        for r in spark.read.parquet(commit_mod.resolve_table(target)).collect()
-    )
-
-
-def test_manifest_commit_swaps_generations_and_prunes(
-    spark, tmp_path, manifest_mode
-):
-    target = str(tmp_path / "mtable")
-    p1 = _staged_overwrite(spark.range(3).select(F.col("id").alias("k")), target)
-    assert p1.startswith(os.path.join(target, "gen-"))
-    assert _read_current(spark, target) == [0, 1, 2]
-    _staged_overwrite(spark.range(10, 12).select(F.col("id").alias("k")), target)
-    assert _read_current(spark, target) == [10, 11]
-    _staged_overwrite(spark.range(20, 23).select(F.col("id").alias("k")), target)
-    assert _read_current(spark, target) == [20, 21, 22]
-    gens = [n for n in os.listdir(target) if n.startswith("gen-")]
-    assert len(gens) == commit_mod.KEEP_GENERATIONS, gens
-
-
-def test_manifest_crash_before_pointer_swap_keeps_old_generation_live(
-    spark, tmp_path, manifest_mode, monkeypatch
-):
-    """The metadata-sized crash window: generation fully written, crash
-    before the pointer swap → every reader stays on the old generation;
-    the rename protocol's 'target briefly absent' window must not exist
-    at all here."""
-    target = str(tmp_path / "mtable")
-    _staged_overwrite(spark.range(5).select(F.col("id").alias("k")), target)
-    before = _read_current(spark, target)
-
-    def crash(*a, **kw):
-        raise OSError("simulated crash between data write and commit")
-
-    monkeypatch.setattr(commit_mod, "_swap_pointer", crash)
-    with pytest.raises(OSError, match="simulated crash"):
-        _staged_overwrite(
-            spark.range(100, 104).select(F.col("id").alias("k")), target
-        )
-    assert _read_current(spark, target) == before
-    monkeypatch.undo()
-    _staged_overwrite(spark.range(7, 9).select(F.col("id").alias("k")), target)
-    assert _read_current(spark, target) == [7, 8]
-
-
-def test_manifest_commit_performs_no_directory_rename(
-    spark, tmp_path, manifest_mode, monkeypatch
-):
-    """Simulated object store: directory rename is NOT available
-    (os.rename raises), and the only atomic primitive is the
-    single-small-file replace — the commit must still succeed, and its
-    one os.replace must target the pointer file."""
-    target = str(tmp_path / "mtable")
-    replaced = []
-
-    def no_rename(*a, **kw):
-        raise AssertionError("manifest commit must not rename directories")
-
-    real_replace = os.replace
-
-    def tracking_replace(src, dst, **kw):
-        replaced.append(dst)
-        assert not os.path.isdir(src), "os.replace used on a directory"
-        return real_replace(src, dst, **kw)
-
-    monkeypatch.setattr(commit_mod.os, "rename", no_rename)
-    monkeypatch.setattr(commit_mod.os, "replace", tracking_replace)
-    _staged_overwrite(spark.range(4).select(F.col("id").alias("k")), target)
-    assert _read_current(spark, target) == [0, 1, 2, 3]
-    assert replaced == [os.path.join(target, commit_mod.CURRENT_POINTER)]
-
-
-def test_manifest_write_failure_leaves_pointer_and_reclaims_partial(
-    spark, tmp_path, manifest_mode
-):
-    target = str(tmp_path / "mtable")
-    _staged_overwrite(spark.range(3).select(F.col("id").alias("k")), target)
-    before = _read_current(spark, target)
-    bad = spark.range(5).select(
-        F.assert_true(F.col("id") < 0).alias("x"), F.col("id").alias("k")
-    )
-    with pytest.raises(Exception):
-        _staged_overwrite(bad, target)
-    assert _read_current(spark, target) == before
-    gens = [n for n in os.listdir(target) if n.startswith("gen-")]
-    assert len(gens) == 1, f"partial generation survived the error path: {gens}"
-
-
-def test_manifest_refuses_pointerless_nonempty_target(
-    spark, tmp_path, manifest_mode
-):
-    """Nesting generations inside a live rename-mode parquet dir would
-    leave bare-path readers seeing mixed content — refuse eagerly."""
-    target = str(tmp_path / "flat_table")
-    spark.range(2).select(F.col("id").alias("k")).write.parquet(target)
-    with pytest.raises(ValueError, match="rename-mode"):
-        _staged_overwrite(spark.range(3).select(F.col("id").alias("k")), target)
 
 
 def test_resolve_table_passthrough_and_corrupt_pointer(tmp_path):
@@ -279,11 +167,6 @@ def test_insert_key_offset_floors_at_fixture_scale_and_grows_past_it(spark):
     assert _insert_key_offset(big) == 10_000_000_000
     edge = spark.createDataFrame([(99_999_999,)], "o_orderkey long")
     assert _insert_key_offset(edge) == 100_000_000
-
-
-# ---------------------------------------------------------------------------
-# v2 per-FILE manifests (VERDICT r15 #2): incremental merge commits.
-# ---------------------------------------------------------------------------
 
 
 def _v2_base(spark, n=400):
@@ -398,6 +281,48 @@ def test_table_merge_crash_before_pointer_swap_keeps_old_manifest_live(
     ) == [0, 1]
 
 
+def test_table_init_refuses_pointerless_nonempty_target(spark, tmp_path):
+    """Nesting a manifest layout inside a live plain parquet dir would
+    leave bare-path readers seeing mixed content — refuse eagerly and
+    leave the target exactly as it was."""
+    target = tmp_path / "flat_table"
+    spark.range(2).select(F.col("id").alias("o_orderkey")).write.parquet(
+        str(target)
+    )
+    before = sorted(os.listdir(target))
+    with pytest.raises(ValueError, match="rename-mode"):
+        commit_mod.table_init(_v2_base(spark), str(target), "o_orderkey")
+    assert sorted(os.listdir(target)) == before
+
+
+def test_table_merge_write_failure_keeps_pointer_and_rows(spark, tmp_path):
+    """The data-sized failure window: the merge's update batch raises
+    while the replacement files are being written.  The pointer must
+    not move, every reader must keep seeing the old rows, and no
+    partial commit dir may survive the error path."""
+    from pyspark_analytics_library_spark.sources.scan_queries import scd1_merged
+
+    target = tmp_path / "t"
+    base = _v2_base(spark)
+    commit_mod.table_init(base, str(target), "o_orderkey", n_buckets=4)
+    pointer = (target / commit_mod.CURRENT_POINTER).read_text()
+    data_dirs = sorted(os.listdir(target / commit_mod.DATA_DIR))
+    before = _v2_rows(spark, target)
+    bad = base.limit(5).select(
+        "o_orderkey",
+        "o_custkey",
+        F.lit("U").alias("o_orderstatus"),
+        F.coalesce(
+            F.assert_true(F.col("o_orderkey") < 0).cast("double"), F.lit(1.0)
+        ).alias("o_totalprice"),
+    )
+    with pytest.raises(Exception):
+        commit_mod.table_merge(spark, str(target), bad, scd1_merged)
+    assert (target / commit_mod.CURRENT_POINTER).read_text() == pointer
+    assert _v2_rows(spark, target) == before
+    assert sorted(os.listdir(target / commit_mod.DATA_DIR)) == data_dirs
+
+
 def test_table_merge_performs_no_directory_rename(spark, tmp_path, monkeypatch):
     """v2 inherits v1's object-store contract: the ONLY shared-state
     mutation is the single pointer-file os.replace — no directory
@@ -496,92 +421,6 @@ def test_table_merge_refuses_rekeying_merge_fn(spark, tmp_path):
     with pytest.raises(ValueError, match="untouched buckets"):
         commit_mod.table_merge(spark, target, updates, rekeying_fn)
     assert _v2_rows(spark, target) == before
-
-
-def test_scd2_apply_on_slice_equals_whole_table_history(spark):
-    """scd2_apply over an all-open base must reproduce scd2_history's
-    result exactly, and applying it per bucket-slice must union to the
-    whole-table answer — the soundness argument table_merge relies on."""
-    from pyspark_analytics_library_spark.sources.scan_queries import (
-        scd2_apply,
-        scd2_history,
-    )
-
-    orders = spark.range(200).select(
-        F.col("id").alias("o_orderkey"),
-        (F.col("id") % 5).alias("o_custkey"),
-        F.lit("O").alias("o_orderstatus"),
-        (F.col("id") * 2.0).alias("o_totalprice"),
-        F.lit("1995-06-01").cast("date").alias("o_orderdate"),
-        F.lit("1-URGENT").alias("o_orderpriority"),
-    )
-    expect = sorted(
-        tuple(r)
-        for r in scd2_history(orders)
-        .select(
-            "o_orderkey",
-            "o_orderstatus",
-            "o_totalprice",
-            "valid_from",
-            "valid_to",
-            "is_current",
-        )
-        .collect()
-    )
-    eff = F.lit("1998-12-01").cast("date")
-    base_hist = orders.select(
-        "o_orderkey",
-        "o_orderstatus",
-        "o_totalprice",
-        F.lit("1990-01-01").cast("date").alias("valid_from"),
-        F.lit(None).cast("date").alias("valid_to"),
-        F.lit(True).alias("is_current"),
-    )
-    from pyspark_analytics_library_spark.sources.scan_queries import (
-        _insert_key_offset,
-    )
-
-    offset = _insert_key_offset(orders)
-    updates = (
-        orders.filter(F.col("o_orderkey") % 97 == 0)
-        .select(
-            "o_orderkey",
-            F.lit("U").alias("o_orderstatus"),
-            (F.floor(F.col("o_totalprice") * 1.1 * 100 + F.lit(0.5)) / 100).alias(
-                "o_totalprice"
-            ),
-            eff.alias("valid_from"),
-        )
-        .unionByName(
-            orders.filter(F.col("o_orderkey") % 101 == 0).select(
-                (F.col("o_orderkey") + F.lit(offset)).alias("o_orderkey"),
-                F.lit("N").alias("o_orderstatus"),
-                F.lit(42.0).alias("o_totalprice"),
-                eff.alias("valid_from"),
-            )
-        )
-    )
-    got = sorted(tuple(r) for r in scd2_apply(base_hist, updates).collect())
-    assert got == expect
-
-    # Slice decomposition: per-bucket applies union to the same rows.
-    n_buckets = 4
-    b_base = base_hist.withColumn(
-        "_b", commit_mod._bucket_expr("o_orderkey", n_buckets)
-    )
-    b_upd = updates.withColumn(
-        "_b", commit_mod._bucket_expr("o_orderkey", n_buckets)
-    )
-    pieces = []
-    for b in range(n_buckets):
-        pieces += [
-            tuple(r)
-            for r in scd2_apply(
-                b_base.filter(F.col("_b") == b).drop("_b"),
-                b_upd.filter(F.col("_b") == b).drop("_b"),
-            ).collect()
-        ]
-    assert sorted(pieces) == expect
 
 
 def test_table_lookup_scans_only_matching_buckets(spark, tmp_path):
@@ -1405,13 +1244,19 @@ def test_mask_split_clean_dirty_partition(spark, tmp_path):
     assert not commit_mod._may_mask(dict(e_disjoint, gen=t["gen"]), t, "o_orderkey")
 
 
-def test_mor_tombstone_skip_shuffle_guarded_by_split_size(spark, tmp_path):
+def test_mor_tombstone_skip_shuffle_guarded_by_split_size(
+    spark, tmp_path, monkeypatch
+):
     """Round-20 guard (VERDICT r19 #4): the tombstone write may skip
-    its exchange only while every delta file fits ONE scan task.  With
-    maxPartitionBytes forced below the delta file sizes, a split delta
-    file would make each scan task write its own file per bucket — the
-    guard must fall back to the repartition, keeping per-bucket
-    tombstone file counts at 1 and the visible rows identical."""
+    its exchange only while every delta file fits ONE scan task, i.e.
+    is smaller than Spark's FilePartition.maxSplitBytes.  That split
+    size shrinks below maxPartitionBytes when the files are few
+    (totalBytes / minPartitionNum) and openCostInBytes is small — so
+    both a tiny maxPartitionBytes and a tiny openCostInBytes (default
+    maxPartitionBytes) must fall back to the repartition, keeping
+    per-bucket tombstone file counts at 1 and the visible rows
+    identical.  (The delta files here are ~1.3 KB each, so the
+    maxPartitionBytes input must sit below that.)"""
     base = _v2_base(spark)
     updates = base.filter(F.col("o_orderkey") % 50 == 0).select(
         "o_orderkey",
@@ -1419,29 +1264,48 @@ def test_mor_tombstone_skip_shuffle_guarded_by_split_size(spark, tmp_path):
         F.lit("U").alias("o_orderstatus"),
         F.lit(1.0).alias("o_totalprice"),
     )
+    real_write = commit_mod._write_bucketed
+    skips = []
 
-    def run(target, conf):
+    def recording_write(*a, **kw):
+        if "skip_shuffle" in kw:
+            skips.append(kw["skip_shuffle"])
+        return real_write(*a, **kw)
+
+    monkeypatch.setattr(commit_mod, "_write_bucketed", recording_write)
+
+    def run(target, confs):
         commit_mod.table_init(base, target, "o_orderkey", n_buckets=4)
-        prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
-        spark.conf.set("spark.sql.files.maxPartitionBytes", conf)
+        prev = {k: spark.conf.get(k) for k in confs}
+        for k, v in confs.items():
+            spark.conf.set(k, v)
         try:
             commit_mod.table_merge_mor(spark, target, updates)
         finally:
-            spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
+            for k, v in prev.items():
+                spark.conf.set(k, v)
         man = commit_mod._load_manifest(target)
         tombs = man.get("tombstones", [])
         per_bucket: dict[int, int] = {}
         for t in tombs:
             per_bucket[t["bucket"]] = per_bucket.get(t["bucket"], 0) + 1
-        return per_bucket, _v2_rows(spark, target)
+        return per_bucket, _v2_rows(spark, target), skips.pop()
 
-    fast_pb, fast_rows = run(str(tmp_path / "fast"), "128m")
-    slow_pb, slow_rows = run(str(tmp_path / "split"), "2k")
-    # guarded path (files "oversized" vs the split size): exactly one
-    # tombstone file per touched bucket, value-identical read
-    assert slow_pb and all(n == 1 for n in slow_pb.values()), slow_pb
-    assert set(slow_pb) == set(fast_pb)
-    assert slow_rows == fast_rows
+    fast_pb, fast_rows, fast_skip = run(
+        str(tmp_path / "fast"), {"spark.sql.files.maxPartitionBytes": "128m"}
+    )
+    assert fast_skip is True
+    for name, confs in (
+        ("split", {"spark.sql.files.maxPartitionBytes": "1k"}),
+        ("open_cost", {"spark.sql.files.openCostInBytes": "1"}),
+    ):
+        slow_pb, slow_rows, slow_skip = run(str(tmp_path / name), confs)
+        # guarded path (files "oversized" vs the split size): exactly one
+        # tombstone file per touched bucket, value-identical read
+        assert slow_skip is False, name
+        assert slow_pb and all(n == 1 for n in slow_pb.values()), (name, slow_pb)
+        assert set(slow_pb) == set(fast_pb), name
+        assert slow_rows == fast_rows, name
 
 
 def test_write_bucketed_skip_shuffle_with_part_spec_raises(spark):
@@ -1458,3 +1322,48 @@ def test_write_bucketed_skip_shuffle_with_part_spec_raises(spark):
             part_spec=("k", "identity"),
             skip_shuffle=True,
         )
+
+
+def test_driver_listing_auto_stays_distributed_on_non_local_master():
+    """``spark.analytics.lake.driverListing=auto`` keeps listing on the
+    driver only for local masters: on a cluster master string the
+    parallel-discovery threshold is never flipped, however many paths
+    the reader lists (a local master with the same paths does flip it,
+    scoped to the reader build)."""
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+    class FakeConf:
+        def __init__(self):
+            self.values = {"spark.analytics.lake.driverListing": "auto"}
+            self.sets = []
+
+        def get(self, k, default=None):
+            return self.values.get(k, default)
+
+        def set(self, k, v):
+            self.sets.append((k, v))
+            self.values[k] = v
+
+    class FakeReader:
+        def __init__(self, conf):
+            self.conf = conf
+
+        def schema(self, _schema):
+            return self
+
+        def parquet(self, *paths):
+            return self.conf.get(key, "32")
+
+    class FakeSession:
+        def __init__(self, master):
+            self.conf = FakeConf()
+            self.read = FakeReader(self.conf)
+            self.sparkContext = type("SC", (), {"master": master})()
+
+    paths = [f"/t/data/f{i}.parquet" for i in range(100)]
+    cluster = FakeSession("spark://master:7077")
+    assert commit_mod._read_paths(cluster, None, paths) == "32"
+    assert cluster.conf.sets == []
+    local = FakeSession("local[4]")
+    assert commit_mod._read_paths(local, None, paths) == "100"
+    assert local.conf.sets == [(key, "100"), (key, "32")]

@@ -845,6 +845,44 @@ def test_cc_sym_bucketed_join_no_edge_exchange(spark, tmp_path):
             (spark.conf.set(k, v) if v is not None else spark.conf.unset(k))
 
 
+def test_cc_bucketed_sym_table_dropped_when_round0_checkpoint_fails(
+    spark, tmp_path, monkeypatch
+):
+    """ADVICE r20 #3: the bucketed sym layout registers a catalog table;
+    a failure right after it is written — here the round-0 label
+    checkpoint — must still drop it, so the catalog gains no table."""
+    import pytest
+
+    from pyspark_analytics_library_spark.operators import dedup as dedup_mod
+
+    real_checkpoint = dedup_mod._cc_checkpoint
+
+    def failing_checkpoint(df, scratch_root, round_no):
+        if round_no == 0:
+            raise RuntimeError("injected round-0 failure")
+        return real_checkpoint(df, scratch_root, round_no)
+
+    monkeypatch.setattr(dedup_mod, "_cc_checkpoint", failing_checkpoint)
+    confs = {
+        "spark.analytics.cc.edgeBuckets": "4",
+        "spark.analytics.cc.driverUnionFindMaxEdges": "0",
+        "spark.analytics.scratchDir": str(tmp_path),
+    }
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    before = {t.name for t in spark.catalog.listTables()}
+    try:
+        edges = spark.createDataFrame([(1, 2), (2, 3), (5, 6)], "src long, dst long")
+        vertices = spark.createDataFrame([(v,) for v in (1, 2, 3, 5, 6)], "v long")
+        with pytest.raises(RuntimeError, match="injected"):
+            dedup_mod.connected_components(edges, vertices).collect()
+    finally:
+        for k, v in prev.items():
+            (spark.conf.set(k, v) if v is not None else spark.conf.unset(k))
+    assert {t.name for t in spark.catalog.listTables()} == before
+
+
 def test_census_scratch_reclaimed_on_failure(spark, tmp_path, monkeypatch):
     """Round-20 (ADVICE r19): an exception inside the census body —
     here injected into the dense numpy section, between the edge write

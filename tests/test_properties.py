@@ -910,6 +910,25 @@ def test_triangle_sparse_path_non_bigint_ids(spark):
     assert row == (6, 12, 4, 1.0)
 
 
+def test_triangle_sparse_path_mixed_int_bigint_ids(spark):
+    """ADVICE r20 #2: with an int ``u`` and a bigint ``v`` column, the
+    sparse path's oriented edge file holds the CASE-widened bigint type;
+    its re-read must use that written schema, not ``u``'s type twice."""
+    from itertools import combinations
+
+    from pyspark_analytics_library_spark.operators.graph import triangle_census
+
+    k4 = spark.createDataFrame(
+        [(u, v) for u, v in combinations(range(4), 2)], "u int, v bigint"
+    )
+    spark.conf.set("spark.analytics.graph.denseMatmulMaxEdges", "1")
+    try:
+        row = tuple(triangle_census(spark, k4).collect()[0])
+    finally:
+        spark.conf.unset("spark.analytics.graph.denseMatmulMaxEdges")
+    assert row == (6, 12, 4, 1.0)
+
+
 def test_ngram_prefix_filter_lossless_across_thresholds(spark):
     """The prefix-length bound n − ⌈τ·n⌉ + 1 must be lossless for any
     τ, not just the declared query's 0.2 — check a spread at the small

@@ -138,3 +138,40 @@ def test_row_at_a_time_udfs_only_in_the_udf_demo_module():
                 if _PYUDF.search(f.read()):
                     offenders.append(rel)
     assert not offenders, f"row-at-a-time F.udf outside the demo module: {offenders}"
+
+
+#: Every ``spark.analytics.*`` conf key the package reads.  Each key
+#: guards a dispatch branch, so adding one is a reviewed decision:
+#: extend this set in the same change, with the measurement that
+#: justifies the new branch.
+CONF_KEYS = {
+    "spark.analytics.cc.driverUnionFindMaxEdges",
+    "spark.analytics.cc.edgeBuckets",
+    "spark.analytics.describe.selfCheck",
+    "spark.analytics.graph.broadcastNbrsMaxEdges",
+    "spark.analytics.graph.denseMatmulMaxEdges",
+    "spark.analytics.graph.denseMatmulMaxVertices",
+    "spark.analytics.graph.sparseMaxWork",
+    "spark.analytics.lake.driverListing",
+    "spark.analytics.quantile.guard",
+    "spark.analytics.quantile.maxLocalStateBytes",
+    "spark.analytics.quantile.onOverCap",
+    "spark.analytics.scratchDir",
+    "spark.analytics.sim.maxIndexBytes",
+    "spark.analytics.sink.dvMaxPositions",
+}
+
+_CONF_LITERAL = re.compile(r"""["'](spark\.analytics\.[A-Za-z0-9_.]+)["']""")
+
+
+def test_conf_key_inventory_is_pinned():
+    found = set()
+    for root, _dirs, files in os.walk(PKG):
+        for fname in files:
+            if fname.endswith(".py"):
+                with open(os.path.join(root, fname), encoding="utf-8") as f:
+                    found |= set(_CONF_LITERAL.findall(f.read()))
+    assert found == CONF_KEYS, (
+        f"spark.analytics.* conf keys changed: added {sorted(found - CONF_KEYS)}, "
+        f"removed {sorted(CONF_KEYS - found)}"
+    )
