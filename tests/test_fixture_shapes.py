@@ -204,3 +204,31 @@ def test_missing_sf_dir_fails_eagerly_with_path_error(spark):
 
     with pytest.raises(AnalysisException, match="sf_does_not_exist"):
         load_tables(spark, "/root/testdata/sf_does_not_exist")
+
+
+def test_every_fixture_scale_has_events_on_both_sides_of_the_late_cutoff():
+    """stream_late_data streams the events before its cutoff as a
+    very-late file that the watermark must drop, and its oracle keeps
+    only windows from the cutoff on.  A fixture with no event on one
+    side of the cutoff would let that oracle pass without any drop
+    being tested."""
+    import glob
+
+    from pyspark_analytics_library_spark.streaming.stream_queries import (
+        _LATE_CUTOFF,
+    )
+    from tests.conftest import TEST_SF_DIR
+
+    root = os.path.dirname(TEST_SF_DIR.rstrip("/"))
+    paths = sorted(glob.glob(os.path.join(root, "sf*", "events.parquet")))
+    if not paths:
+        pytest.skip(f"no sf*/events.parquet fixtures under {root}")
+    for path in paths:
+        before, after = duckdb.sql(
+            f"SELECT count_if(ts < TIMESTAMP '{_LATE_CUTOFF}'), "
+            f"count_if(ts >= TIMESTAMP '{_LATE_CUTOFF}') "
+            f"FROM read_parquet('{path}')"
+        ).fetchone()
+        assert before > 0 and after > 0, (
+            f"{path}: {before} events before {_LATE_CUTOFF}, {after} from it on"
+        )

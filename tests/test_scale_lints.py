@@ -26,12 +26,6 @@ PKG = os.path.join(
 #: sites (``.collect()`` + ``.toPandas()``).  Every entry is justified
 #: in the file itself at the cited call site.
 WHITELIST = {
-    # batch-vs-stream self-checks: three scalar event-count collects,
-    # the two group-count-sized collects inside
-    # _assert_stream_matches_batch (full result-set parity), and the
-    # two 1-row scalar-aggregate collects in stream_late_data's
-    # embedded watermark-drop check
-    "streaming/stream_queries.py": 7,
     # agg_describe embedded self-check: the 8-row summary() grid plus
     # one scalar-aggregate row, both bounded by the statistic list;
     # plus exact_quantile_guard's 1-row approx_count_distinct probe

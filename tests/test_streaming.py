@@ -1,36 +1,36 @@
-"""Batch-parity self-checks for the streaming queries (SURVEY.md §2.11):
-each streaming result is compared against the same logic run in batch
-mode — the strongest check available without a streaming oracle.
+"""Streaming queries (SURVEY.md §2.11): each streaming result matches
+the same logic run as a Spark batch job, the DuckDB oracles reject
+wrong stream results, unfinished streams raise instead of returning a
+partial sink, and the scratch janitor reclaims exactly its leak classes.
+
+Whether each query's result equals its DuckDB oracle is checked by
+tests/test_driver_contract.py::test_query_matches_oracle.
 """
 
 from __future__ import annotations
 
-from hypothesis import given as hyp_given
-from hypothesis import strategies as st
+import pytest
 from pyspark.sql import functions as F
 
 from pyspark_analytics_library_spark.registry import REGISTRY, load_all_query_modules
 from pyspark_analytics_library_spark.sources.io import load_tables
-from tests.conftest import TEST_SF_DIR
+from pyspark_analytics_library_spark.streaming.stream_queries import (
+    run_to_memory,
+    stream_events,
+)
+from tests.conftest import TEST_SF_DIR, assert_query_matches_oracle
 
 load_all_query_modules()
 
 
-def _split_parity(stream, expect="full-parity"):
-    """Every rows-only streaming query carries the attestation column
-    (VERDICT r13 #6); since ADVICE r14 its VALUE names the check kind,
-    so a green row can't overclaim full parity when only a weaker
-    watermark-drop/event-count check ran.  Peel it off for the tuple
-    compare and assert the expected kind was stamped uniformly."""
-    vals = {r["selfcheck"] for r in stream.select("selfcheck").distinct().collect()}
-    assert vals == {expect}, f"selfcheck not uniformly {expect!r}: {vals}"
-    return stream.drop("selfcheck")
+def _events(spark):
+    return load_tables(spark, TEST_SF_DIR, register_views=False)["events"]
 
 
 def test_stream_tumbling_matches_batch(spark):
-    stream = _split_parity(REGISTRY["stream_tumbling"].fn(spark, TEST_SF_DIR))
+    stream = REGISTRY["stream_tumbling"].fn(spark, TEST_SF_DIR)
     batch = (
-        load_tables(spark, TEST_SF_DIR)["events"]
+        _events(spark)
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
@@ -39,9 +39,9 @@ def test_stream_tumbling_matches_batch(spark):
 
 
 def test_stream_sliding_matches_batch(spark):
-    stream = _split_parity(REGISTRY["stream_sliding"].fn(spark, TEST_SF_DIR))
+    stream = REGISTRY["stream_sliding"].fn(spark, TEST_SF_DIR)
     batch = (
-        load_tables(spark, TEST_SF_DIR)["events"]
+        _events(spark)
         .groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"))
         .agg(F.count(F.lit(1)).alias("n_events"), F.round(F.sum("value"), 4).alias("total_value"))
         .select(F.col("w.start").alias("window_start"), "n_events", "total_value")
@@ -50,38 +50,43 @@ def test_stream_sliding_matches_batch(spark):
 
 
 def test_stream_session_total_events_preserved(spark):
-    stream = _split_parity(REGISTRY["stream_session"].fn(spark, TEST_SF_DIR))
-    n_events = load_tables(spark, TEST_SF_DIR)["events"].count()
-    assert stream.agg(F.sum("n_events")).collect()[0][0] == n_events
+    stream = REGISTRY["stream_session"].fn(spark, TEST_SF_DIR)
+    assert stream.agg(F.sum("n_events")).collect()[0][0] == _events(spark).count()
 
 
 def test_stream_late_data_drops_rows(spark):
     """APPEND mode + advanced watermark must drop the late file's rows."""
-    stream = _split_parity(
-        REGISTRY["stream_late_data"].fn(spark, TEST_SF_DIR), expect="watermark-drop"
-    )
+    stream = REGISTRY["stream_late_data"].fn(spark, TEST_SF_DIR)
     counted = stream.agg(F.sum("n_events")).collect()[0][0] or 0
-    total = load_tables(spark, TEST_SF_DIR)["events"].count()
+    total = _events(spark).count()
     assert counted < total, f"late rows were not dropped ({counted} vs {total})"
     assert counted > 0
 
 
+def test_stream_late_data_output_has_no_precutoff_window(spark):
+    """Spark-side comparison on purpose: collected timestamps render in
+    the driver OS timezone, not the session timezone, so a Python-side
+    `< datetime(...)` would break (or silently weaken) on any non-UTC
+    machine."""
+    stream = REGISTRY["stream_late_data"].fn(spark, TEST_SF_DIR)
+    cutoff = F.lit("2024-01-10 00:00:00").cast("timestamp")
+    pre, total = stream.agg(
+        F.count_if(F.col("window_start") < cutoff), F.count(F.lit(1))
+    ).collect()[0]
+    assert total > 0
+    assert pre == 0
+
+
 def test_stream_dedup_collapses_duplicates(spark):
-    stream = _split_parity(REGISTRY["stream_dedup"].fn(spark, TEST_SF_DIR))
-    batch = (
-        load_tables(spark, TEST_SF_DIR)["events"]
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
+    stream = REGISTRY["stream_dedup"].fn(spark, TEST_SF_DIR)
+    batch = _events(spark).groupBy("event_type").agg(F.count(F.lit(1)).alias("n_events"))
     assert sorted(map(tuple, stream.collect())) == sorted(map(tuple, batch.collect()))
 
 
 def test_stream_stateful_matches_batch_totals(spark):
-    stream = _split_parity(
-        REGISTRY["stream_stateful"].fn(spark, TEST_SF_DIR), expect="event-count"
-    )
+    stream = REGISTRY["stream_stateful"].fn(spark, TEST_SF_DIR)
     batch = (
-        load_tables(spark, TEST_SF_DIR)["events"]
+        _events(spark)
         .groupBy("user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -98,16 +103,13 @@ def test_stream_stateful_matches_batch_totals(spark):
 
 
 def test_stream_sink_covers_all_events(spark):
-    stream = _split_parity(
-        REGISTRY["stream_sink"].fn(spark, TEST_SF_DIR), expect="event-count"
-    )
-    total = stream.agg(F.sum("n")).collect()[0][0]
-    assert total == load_tables(spark, TEST_SF_DIR)["events"].count()
+    stream = REGISTRY["stream_sink"].fn(spark, TEST_SF_DIR)
+    assert stream.agg(F.sum("n")).collect()[0][0] == _events(spark).count()
 
 
 def test_stream_static_join_matches_batch(spark):
-    stream = _split_parity(REGISTRY["stream_static_join"].fn(spark, TEST_SF_DIR))
-    ev = load_tables(spark, TEST_SF_DIR)["events"]
+    stream = REGISTRY["stream_static_join"].fn(spark, TEST_SF_DIR)
+    ev = _events(spark)
     static = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("lifetime_events"))
     batch = (
         ev.join(static, "user_id")
@@ -121,8 +123,8 @@ def test_stream_static_join_matches_batch(spark):
 
 
 def test_stream_stream_join_matches_batch(spark):
-    stream = _split_parity(REGISTRY["stream_stream_join"].fn(spark, TEST_SF_DIR))
-    ev = load_tables(spark, TEST_SF_DIR)["events"]
+    stream = REGISTRY["stream_stream_join"].fn(spark, TEST_SF_DIR)
+    ev = _events(spark)
     clicks = ev.filter(F.col("event_type") == "click").select(
         F.col("user_id").alias("c_user"), F.col("ts").alias("c_ts")
     )
@@ -146,11 +148,9 @@ def test_stream_foreach_batch_matches_batch_totals(spark):
     """foreachBatch appends per-micro-batch aggregates; re-aggregating
     them must reproduce the plain batch totals regardless of how many
     micro-batches the source emitted."""
-    stream = _split_parity(
-        REGISTRY["stream_foreach_batch"].fn(spark, TEST_SF_DIR), expect="event-count"
-    )
+    stream = REGISTRY["stream_foreach_batch"].fn(spark, TEST_SF_DIR)
     batch = (
-        load_tables(spark, TEST_SF_DIR)["events"]
+        _events(spark)
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -163,113 +163,61 @@ def test_stream_foreach_batch_matches_batch_totals(spark):
     assert got == want
 
 
-def test_parity_check_skips_past_the_cap(spark):
-    """_assert_stream_matches_batch must SKIP (not collect-and-compare,
-    not raise) when the result exceeds _PARITY_CAP — the check attests
-    fixture-scale semantics and must never pull an input-scaled result
-    through the driver of a production job."""
-    from pyspark.sql import functions as F
+def _tumbling_missing_one_window(spark):
+    df = REGISTRY["stream_tumbling"].fn(spark, TEST_SF_DIR)
+    first = df.agg(F.min("window_start").alias("w0"))
+    return df.join(first, df["window_start"] == first["w0"], "left_anti")
 
-    from pyspark_analytics_library_spark.streaming.stream_queries import (
-        _PARITY_CAP,
-        _assert_stream_matches_batch,
+
+def _late_data_without_watermark(spark):
+    """Every hourly window in batch: keeps the pre-cutoff windows the
+    watermark drops and the final windows it never closes."""
+    return (
+        _events(spark)
+        .groupBy(F.window("ts", "1 hour").alias("w"))
+        .agg(F.count(F.lit(1)).alias("n_events"))
+        .select(F.col("w.start").alias("window_start"), "n_events")
     )
 
-    import pytest as _pytest
 
-    # BOTH sides past the cap: skip (fixture-scale attestation only) —
-    # even though the ranges differ beyond the cap
-    big = spark.range(_PARITY_CAP + 10).select(F.col("id"))
-    bigger = spark.range(_PARITY_CAP + 20).select(F.col("id"))
-    _assert_stream_matches_batch(big, bigger, "cap-probe-both")
+def _dedup_without_dropping_duplicates(spark):
+    ev = stream_events(spark, TEST_SF_DIR)
+    agg = ev.union(ev).groupBy("event_type").agg(F.count(F.lit(1)).alias("n_events"))
+    name, s = run_to_memory(agg, "complete")
+    return s.table(name)
 
-    # exactly ONE side past the cap: the cardinalities provably differ
-    # (≤cap vs >cap), so this must RAISE — in both directions — without
-    # quoting the truncated collect as a real count
-    other = spark.range(5).select(F.col("id"))
-    with _pytest.raises(AssertionError, match="exceeds the .*parity cap"):
-        _assert_stream_matches_batch(big, other, "cap-probe-stream-over")
-    with _pytest.raises(AssertionError, match="exceeds the .*parity cap"):
-        _assert_stream_matches_batch(other, big, "cap-probe-batch-over")
 
-    # under the cap the same divergence must raise
-    with _pytest.raises(AssertionError, match="diverges"):
-        _assert_stream_matches_batch(
-            spark.range(5).select(F.col("id")),
-            spark.range(6).select(F.col("id")),
-            "small-probe",
+@pytest.mark.parametrize(
+    "name, wrong",
+    [
+        ("stream_tumbling", _tumbling_missing_one_window),
+        ("stream_late_data", _late_data_without_watermark),
+        ("stream_dedup", _dedup_without_dropping_duplicates),
+    ],
+)
+def test_stream_oracle_rejects_wrong_result(spark, oracle, name, wrong):
+    """The oracles replace the queries' former in-query batch-twin
+    checks, so each must fail on the divergence that check caught."""
+    with pytest.raises(AssertionError):
+        assert_query_matches_oracle(
+            wrong(spark), oracle, REGISTRY[name].oracle, name=name
         )
 
 
-def test_parity_check_survives_tied_keys_with_ulp_floats(spark):
-    """VERDICT r5 #2: rows tied on their non-float key whose float
-    cells differ by one ulp between stream and batch must PASS — under
-    the old raw-tuple sort the float decided order and misaligned the
-    zip compare, failing a genuine parity pass."""
-    import math
+@pytest.mark.parametrize(
+    "name", ["stream_tumbling", "stream_sink", "stream_foreach_batch"]
+)
+def test_unfinished_stream_raises_timeout(spark, monkeypatch, name):
+    """A stream that did not drain its source within the timeout leaves
+    a partial sink; the query must raise rather than return it.  One
+    query per wait site: the memory sink and both foreachBatch sinks."""
+    from pyspark.sql.streaming import StreamingQuery
 
-    from pyspark_analytics_library_spark.streaming.stream_queries import (
-        _assert_stream_matches_batch,
+    monkeypatch.setattr(
+        StreamingQuery, "awaitTermination", lambda self, timeout=None: False
     )
-
-    schema = "k string, v double, tag string"
-    got = spark.createDataFrame([("a", 1.0, "x"), ("a", 1.0, "y")], schema)
-    want = spark.createDataFrame(
-        [
-            ("a", math.nextafter(1.0, 2.0), "x"),
-            ("a", math.nextafter(1.0, 0.0), "y"),
-        ],
-        schema,
-    )
-    _assert_stream_matches_batch(got, want, "ulp-probe")
-
-
-def test_parity_check_is_none_safe(spark):
-    """ADVICE r5: None beside a non-None value in the same column made
-    the old sorted() comparison raise TypeError mid-check."""
-    from pyspark_analytics_library_spark.streaming.stream_queries import (
-        _assert_stream_matches_batch,
-    )
-
-    schema = "k string, n bigint"
-    got = spark.createDataFrame([(None, 1), ("b", 2)], schema)
-    want = spark.createDataFrame([("b", 2), (None, 1)], schema)
-    _assert_stream_matches_batch(got, want, "none-probe")
-
-
-def test_parity_check_rejects_two_grid_steps(spark):
-    """ADVICE r5: tolerance is one step of the 4dp rounding grid — a
-    float divergence of 5e-4 (well past summation-order noise) must
-    FAIL, where the old 1e-3 abs_tol silently passed it."""
-    import pytest as _pytest
-
-    from pyspark_analytics_library_spark.streaming.stream_queries import (
-        _assert_stream_matches_batch,
-    )
-
-    schema = "k string, v double"
-    got = spark.createDataFrame([("a", 1.0)], schema)
-    want = spark.createDataFrame([("a", 1.0005)], schema)
-    with _pytest.raises(AssertionError, match="diverges"):
-        _assert_stream_matches_batch(got, want, "tol-probe")
-
-
-def test_stream_late_data_output_has_no_precutoff_window(spark):
-    """The embedded self-check asserts this inside the query; assert it
-    from the outside too so a regression in the check itself (not just
-    the semantics) is caught.  Spark-side comparison on purpose:
-    collected timestamps render in the driver OS timezone, not the
-    session timezone, so a Python-side `< datetime(...)` would break
-    (or silently weaken) on any non-UTC machine."""
-    stream = _split_parity(
-        REGISTRY["stream_late_data"].fn(spark, TEST_SF_DIR), expect="watermark-drop"
-    )
-    cutoff = F.lit("2024-01-10 00:00:00").cast("timestamp")
-    pre, total = stream.agg(
-        F.count_if(F.col("window_start") < cutoff), F.count(F.lit(1))
-    ).collect()[0]
-    assert total > 0
-    assert pre == 0
+    with pytest.raises(TimeoutError):
+        REGISTRY[name].fn(spark, TEST_SF_DIR)
 
 
 def test_scratch_janitor_prunes_leaked_dirs_only(tmp_path, monkeypatch):
@@ -436,121 +384,3 @@ def test_scan_scratch_invokes_janitor(tmp_path, monkeypatch):
     path = scq._scratch("sink_probe")
     assert not leaked.exists()
     assert path.endswith(os.path.join(f"pid{os.getpid()}", "sink_probe"))
-
-
-def test_cells_match_admits_one_grid_step_rejects_two():
-    """The tolerance must admit exactly one step of the 4dp rounding
-    grid (adjacent 4dp doubles differ by slightly MORE than 1e-4 in
-    IEEE form — the reason abs_tol is 1.5e-4, not 1e-4) and reject two
-    steps."""
-    from pyspark_analytics_library_spark.streaming.stream_queries import (
-        _cells_match,
-    )
-
-    assert _cells_match(0.1234, 0.1235)
-    assert _cells_match(12.3456, 12.3457)
-    assert _cells_match(99.9999, 100.0)
-    assert not _cells_match(0.1234, 0.1236)
-    assert not _cells_match(12.3456, 12.3458)
-    # The guarantee must hold at SUM-sized magnitudes too: with
-    # isclose's default rel_tol=1e-9 a 1e6-scale cell would tolerate
-    # ~1e-3 (ten grid steps) — rel_tol is pinned to 0 so abs_tol is
-    # the sole bound at every magnitude (ADVICE r6).
-    assert _cells_match(1234567.1234, 1234567.1235)
-    assert not _cells_match(1234567.1234, 1234567.1236)
-
-
-@hyp_given(st.floats(min_value=1e11, max_value=1e15), st.integers(1, 4))
-def test_cells_match_ulp_floor_at_large_magnitudes(x, k):
-    """PROPERTY (VERDICT r8 #3): above ~2.6e11, where one double ulp
-    exceeds the flat 1.5e-4 grid bound, the tolerance floor is 4 ulps —
-    a k≤4-ulp summation-order divergence must PASS (the flat bound
-    alone would degrade to exact equality there) and a 16-ulp
-    divergence must still FAIL.  Magnitude range brackets the sf≈1
-    parity-sum scale the flat bound could not serve."""
-    import math
-
-    from pyspark_analytics_library_spark.streaming.stream_queries import (
-        _cells_match,
-    )
-
-    y = x
-    for _ in range(k):
-        y = math.nextafter(y, math.inf)
-    assert _cells_match(x, y)
-    far = x + 16.0 * math.ulp(x)
-    if far - x > 1.5e-4:  # guard: near 1e11 sixteen ulps can sit under the grid bound
-        assert not _cells_match(x, far)
-
-
-def test_group_matching_backtracks_past_greedy_order():
-    """Two rows tied on keys whose floats have OVERLAPPING tolerance
-    windows: greedy first-fit pairs stream 1.0001 with batch 1.0002 and
-    then dead-ends; the augmenting-path matcher must find the valid
-    pairing (1.0001→1.0000, 1.0002→1.0002)."""
-    from pyspark_analytics_library_spark.streaming.stream_queries import (
-        _group_matches,
-    )
-
-    got = [("k", 1.0001), ("k", 1.0002)]
-    want = [("k", 1.0002), ("k", 1.0000)]
-    assert _group_matches(got, want)
-    # and a genuinely unmatchable set still fails
-    assert not _group_matches([("k", 1.0), ("k", 1.0002)], [("k", 1.0), ("k", 1.01)])
-
-
-def _parity_multiset_ok(got_rows, want_rows) -> bool:
-    """Drives the REAL pure multiset core the assert helper uses."""
-    from pyspark_analytics_library_spark.streaming.stream_queries import (
-        _parity_rows_match,
-    )
-
-    return _parity_rows_match(got_rows, want_rows) is None
-
-
-@hyp_given(
-    st.lists(
-        st.tuples(
-            st.sampled_from(["a", "b", None]),
-            st.integers(0, 3).map(lambda i: float(i) / 100.0),
-            st.integers(-5, 5),
-        ),
-        max_size=12,
-    ),
-    st.randoms(use_true_random=False),
-)
-def test_parity_matching_accepts_noise_within_one_grid_step(rows, rnd):
-    """PROPERTY: any permutation of the batch rows with per-float noise
-    strictly inside the tolerance must match — regardless of ties,
-    Nones, duplicate rows, or how the noise reorders a raw sort."""
-    want = [
-        (k, v + (rnd.random() - 0.5) * 1e-4, n)  # |noise| ≤ 5e-5 < 1.5e-4
-        for (k, v, n) in rows
-    ]
-    rnd.shuffle(want)
-    assert _parity_multiset_ok(rows, want)
-
-
-@hyp_given(
-    st.lists(
-        st.tuples(
-            st.sampled_from(["a", "b"]),
-            st.integers(0, 9).map(lambda i: float(i) / 100.0),
-            st.integers(-5, 5),
-        ),
-        min_size=1,
-        max_size=10,
-        unique=True,
-    ),
-    st.randoms(use_true_random=False),
-)
-def test_parity_matching_rejects_divergence_beyond_tolerance(rows, rnd):
-    """PROPERTY: perturbing ONE row's float by 4e-4 (past tolerance,
-    while all generated floats sit on a 1e-2 grid so it cannot sidle up
-    to a different row) must be reported as divergence."""
-    want = list(rows)
-    i = rnd.randrange(len(want))
-    k, v, n = want[i]
-    want[i] = (k, v + 4e-4, n)
-    rnd.shuffle(want)
-    assert not _parity_multiset_ok(rows, want)
