@@ -518,8 +518,10 @@ def _parse_size_bytes(s: str) -> int:
 def exact_quantile_guard(
     spark: SparkSession, df: DataFrame, cols: list[str] | dict[str, int]
 ) -> set[str]:
-    """Fail fast before Spark's exact percentile state OOMs the JVM
-    (VERDICT r15 #2).
+    """The columns whose exact percentile state would exceed the cap —
+    the callers compute those through :func:`binned_exact_percentiles`
+    instead of letting Spark's native path OOM the JVM (VERDICT r15 #2,
+    r16 #7).  Empty set = under cap, use the native exact path.
 
     ``percentile()``/``median()`` accumulate an open hash map of every
     distinct value SEEN BY EACH TASK, so concurrent single-JVM state is
@@ -534,30 +536,16 @@ def exact_quantile_guard(
     (A distinct-count cap alone misses this: the distinct count is the
     SAME at both scales; the rows-per-task term is what grows.)
 
-    The guard spends ONE cheap aggregate (count + HLL
+    The probe is ONE cheap aggregate (count + HLL
     approx_count_distinct per column, fixed-size sketch state at any
-    input size) and raises an ACTIONABLE error naming the sketch path
-    when the estimate exceeds ``spark.analytics.quantile.
-    maxLocalStateBytes`` (default 256 MB ≈ the OOM cliff of a small
-    1 g executor with the merge phase's transient doubling; size it to
-    roughly a quarter of executor heap).  The estimate models ONE JVM
-    under local-mode assumptions; on a multi-executor cluster state
-    spreads across JVMs, so the default is conservative there — raise
-    the cap with executor memory.  ``spark.analytics.quantile.guard``
-    = ``false`` skips the probe job entirely (the describe.selfCheck
-    pattern) when the caller has sized heaps for a known value domain.
-
-    Round 17 (VERDICT r16 #7): the guard now RETURNS the set of
-    over-cap columns instead of always raising, so callers can compute
-    the exact answer anyway via :func:`binned_exact_percentiles`
-    (bounded-state two-pass binning) — ``spark.analytics.quantile.
-    onOverCap`` selects the behavior: ``binned`` (default — compute,
-    never OOM, never refuse) or ``error`` (the r15/r16 refusal with
-    the actionable message, for callers who want the cheap plan or
-    nothing).  Empty set = under cap, use the native exact path.
+    input size); a column is over cap when its estimate exceeds
+    ``spark.analytics.quantile.maxLocalStateBytes`` (default 256 MB ≈
+    the OOM cliff of a small 1 g executor with the merge phase's
+    transient doubling; size it to roughly a quarter of executor heap).
+    The estimate models ONE JVM under local-mode assumptions; on a
+    multi-executor cluster state spreads across JVMs, so the default is
+    conservative there — raise the cap with executor memory.
     """
-    if spark.conf.get("spark.analytics.quantile.guard", "true").lower() != "true":
-        return set()
     # cols maps column -> number of exact-percentile EXPRESSIONS over
     # it (review r16: Spark's Percentile/Median buffers are per
     # expression, not shared per column — three percentiles over one
@@ -575,31 +563,11 @@ def exact_quantile_guard(
     ).collect()[0]
     n_rows = probe["_n"]
     par = max(spark.sparkContext.defaultParallelism, 1)
-    est = {
-        c: min(probe[c] * par, n_rows) * _QUANTILE_BYTES_PER_ENTRY * k
+    return {
+        c
         for c, k in mult.items()
+        if min(probe[c] * par, n_rows) * _QUANTILE_BYTES_PER_ENTRY * k > cap
     }
-    over = {c: b for c, b in est.items() if b > cap}
-    if over and (
-        spark.conf.get("spark.analytics.quantile.onOverCap", "binned").lower()
-        == "error"
-    ):
-        detail = ", ".join(f"{c}≈{b / 1e6:.0f} MB" for c, b in over.items())
-        raise ValueError(
-            "agg_quantile: exact percentile/median would hold "
-            f"~min(distinct × {par} tasks, {n_rows} rows) × "
-            f"{_QUANTILE_BYTES_PER_ENTRY} B of concurrent hash-map state "
-            f"({detail}), over spark.analytics.quantile.maxLocalStateBytes="
-            f"{cap} (calibration: ~300 MB estimated state OOM-killed a 1 g "
-            "JVM — SCALE.md round-15 sf≈1 sweep).  Use the sketch path "
-            "instead (agg_approx_quantile / F.percentile_approx: fixed-size "
-            "state at any scale), the exact bounded-state path "
-            "(spark.analytics.quantile.onOverCap=binned — two-pass range "
-            "binning, the default), raise the cap in step with executor "
-            "memory, or set spark.analytics.quantile.guard=false to bypass "
-            "this probe."
-        )
-    return set(over)
 
 
 def binned_exact_percentiles(
@@ -612,9 +580,9 @@ def binned_exact_percentiles(
     max_rounds: int = 40,
 ) -> dict[tuple, dict[float, float | None]]:
     """EXACT grouped percentiles with BOUNDED state at any input size —
-    the compute-instead-of-refuse path behind :func:`exact_quantile_guard`
-    (VERDICT r16 #7: the r15 OOM shape should return the exact median,
-    not a refusal).
+    the over-cap path behind :func:`exact_quantile_guard` (VERDICT r16
+    #7: the r15 OOM shape should return the exact median, not a
+    refusal).
 
     Spark's native ``percentile()`` holds every distinct value per task
     in a hash map — O(distinct) state, the thing that OOM'd a 1 g heap
@@ -860,8 +828,7 @@ def q_agg_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     state); :func:`exact_quantile_guard` estimates that state first
     and, past the conf cap, the query COMPUTES the same exact answer
     through :func:`binned_exact_percentiles` (bounded-state iterative
-    range binning) instead of OOMing — or refuses with the sketch-path
-    message under ``onOverCap=error`` (VERDICT r15 #2 / r16 #7).  The
+    range binning) instead of OOMing (VERDICT r15 #2 / r16 #7).  The
     100 TB cheap default remains `agg_approx_quantile` below."""
     t = load_tables(spark, sf_dir)
     df = t["lineitem"]

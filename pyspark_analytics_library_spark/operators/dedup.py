@@ -572,14 +572,18 @@ def connected_components(
       collect under their caps.  This removes the per-round job latency
       entirely for small candidate graphs (the common LSH output: a few
       hundred to a few hundred thousand pairs even on large corpora).
-      Set the cap to ``0`` to force the distributed loop.  Above-cap
-      cost, stated honestly (ADVICE r19): ``CollectLimit`` early-exits
-      only when the edge plan's FINAL stage is limit-pushable — when
-      the plan ends in a shuffle (the usual LSH candidate join), the
-      probe executes that plan essentially in full before the loop
-      materializes it AGAIN, so operators of large fuzzy pipelines
-      whose edge sets are known to exceed the cap should set the cap
-      to ``0`` and skip the probe.
+      Above-cap cost, stated honestly (ADVICE r19): ``CollectLimit``
+      early-exits only when the edge plan's FINAL stage is
+      limit-pushable — when the plan ends in a shuffle (the usual LSH
+      candidate join), the probe executes that plan essentially in
+      full before the loop materializes it AGAIN.
+    - **Edge layout.**  An edge set the probe proved bigger than the
+      cap is materialized as a ``bucketBy(src)`` table, so the loop's
+      per-round join never re-shuffles it (see _cc_materialize_sym).
+      Setting the cap to ``0`` skips the probe and forces the loop on
+      the PLAIN parquet layout (nothing was proven about |E|); a cap
+      of ``1`` with more than one edge forces the loop on the bucketed
+      layout.
     - **Singleton bypass.**  The distributed loop now iterates over the
       EDGE-INCIDENT vertices only — every other vertex's component is
       itself by definition, so carrying them through log(diameter)
@@ -633,8 +637,8 @@ def connected_components(
         spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
         # Reaching the loop with uf_cap > 0 means the dispatch probe
-        # PROVED |E| > uf_cap — the signal the auto edge-bucketing
-        # policy keys on (see _cc_materialize_sym).
+        # PROVED |E| > uf_cap — the fact the edge layout keys on (see
+        # _cc_materialize_sym).
         lab = _cc_loop(sym, max_iters, big_edges=uf_cap > 0)
     finally:
         if trim:
@@ -890,35 +894,33 @@ def _cc_materialize_sym(
     spark, sym: DataFrame, scratch_root: str, big_edges: bool = False
 ):
     """Materialize the symmetrized edge list ONCE — as a BUCKETED,
-    src-sorted table when the edge set is big (round-20 optimization,
-    guide §2.4 "bucketed tables persist a partitioning across jobs" /
-    VERDICT r19 next #1), else as plain coalesced parquet.
+    src-sorted table when ``big_edges`` (the union-find probe proved
+    |E| > ``spark.analytics.cc.driverUnionFindMaxEdges``), else as
+    plain coalesced parquet.
 
     The loop joins ``sym`` on ``src`` every round; a plain parquet
     materialization loses the layout, so at any label size past the
-    broadcast threshold every round re-shuffles (and re-sorts) the
-    ENTIRE edge table for the sort-merge join — log(diameter) edge
-    exchanges for one edge set.  ``bucketBy(n, src).sortBy(src)``
-    persists hash(src) partitioning + order in the table metadata, so
-    every round's join reads the buckets with ZERO exchange and ZERO
-    sort on the edge side (plan pinned by
-    tests/test_plans.py::test_cc_sym_bucketed_join_no_edge_exchange);
-    only the vertex-sized label table moves per round.  The up-front
-    ``repartition(n, src)`` uses the same hash as the bucket spec, so
-    each task holds exactly one bucket → one file per bucket (no
-    small-file spray).
+    broadcast threshold every round re-shuffles the ENTIRE edge table
+    for the sort-merge join — log(diameter) edge exchanges for one
+    edge set.  ``bucketBy(n, src)`` persists hash(src) partitioning in
+    the table metadata, so every round's join reads the buckets with
+    ZERO exchange on the edge side; only the vertex-sized label table
+    moves per round.  The edge side still carries a per-bucket
+    ``Sort``: a bucketed scan reports its ``sortBy`` order to the
+    planner only under ``spark.sql.legacy.bucketedTableScan.
+    outputOrdering`` (off by default), so the sort-merge join re-sorts
+    each bucket locally (plan pinned by
+    tests/test_plans.py::test_cc_sym_bucketed_join_no_edge_exchange).
+    The up-front ``repartition(n, src)`` uses the same hash as the
+    bucket spec, so each task holds exactly one bucket → one file per
+    bucket (no small-file spray).  ``n`` is the session's
+    ``spark.sql.shuffle.partitions``; on a cluster size it like any
+    edge-table shuffle.
 
     The bucketed write costs one up-front edge shuffle plus a catalog
     round-trip (~0.3-0.5 s measured locally), which only pays off when
     the per-round join would otherwise exchange the edge table — i.e.
-    when |E| is large.  ``spark.analytics.cc.edgeBuckets`` picks the
-    policy: ``auto`` (default) buckets exactly when the union-find
-    dispatch probe PROVED |E| > driverUnionFindMaxEdges (the only case
-    the loop runs in production; bucket count = the session's shuffle
-    partitions — on a cluster size it like any edge-table shuffle), an
-    integer > 0 forces bucketing with that count (the plan-pin test
-    and cluster operators who zeroed the UF cap), and ``0`` never
-    buckets.
+    when |E| is large, which is what ``big_edges`` states.
 
     Returns ``(df, drop_fn)``; ``drop_fn`` removes the catalog entry
     (the data files live in ``scratch_root`` and are reclaimed by the
@@ -926,19 +928,12 @@ def _cc_materialize_sym(
     import uuid as _uuid
 
     sym_path = os.path.join(scratch_root, "sym")
-    conf = str(spark.conf.get("spark.analytics.cc.edgeBuckets", "auto"))
-    if conf == "auto":
-        bucket, n_buckets = big_edges, 0
-    else:
-        n_buckets = int(conf)
-        bucket = n_buckets > 0
-    if not bucket:
+    if not big_edges:
         sym.coalesce(8).write.mode("overwrite").parquet(sym_path)
         # known schema: skip the re-read's footer inference (see
         # _cc_checkpoint)
         return spark.read.schema(sym.schema).parquet(sym_path), (lambda: None)
-    if n_buckets <= 0:
-        n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     tbl = f"pyspark_analytics_cc_sym_{_uuid.uuid4().hex[:12]}"
     (
         sym.repartition(n_buckets, "src")

@@ -102,53 +102,11 @@ class _Pin:
 #: the query re-enters the normal staleness rotation — a pin can never
 #: permanently starve the least-recently-attested tier.
 #:
-#: Pin history (all cleared): stream_stateful/stream_sink/
-#: stream_foreach_batch/dedup_connected_components (until r5, machinery
-#: changes in r4-5, cleared r9); sql_subquery_scalar (until r9,
-#: threshold 4x->1.5x, cleared r9); query_important_stock /
-#: query_volume_shipping (until r10, scale-invariant threshold
-#: rewrites from the all-SF vacuity sweep, cleared r10 at 155/14 rows).
-#:
-#: mm_decode_batch (until r13): round 13 replaced the hash-derived
-#: decode stub with the real IMG1 binary codec — new output schema
-#: (width/height/n_px/px_md5/px_sum), new oracle.  expect_rows=None
-#: per the _Pin contract: the driver-SF row count (500 = all
-#: documents) does not move with the change.
-#:
-#: sink_merge_upsert (until r13): check column rescaled
-#: total_price_k → total_price_m after the round-13 SCD-2 100× probe
-#: showed the /1e3 4-dp spelling sits inside cross-engine
-#: summation-order noise at 15 M rows.  Row count (5 status groups at
-#: sf0.01) does not move → expect_rows=None.
-#: agg_pricing_summary / agg_rollup / join_broadcast (until r15):
-#: price sums respelled money_sum (decimal-exact, §5.3 rule 12) after
-#: the round-15 sf≈1 sweep caught all three flipping a 4-dp digit to
-#: cross-engine (and even cross-RUN DuckDB thread-order) summation
-#: noise.  agg_histogram / sql_ansi_shared (until r15): same
-#: respelling from the sweep's follow-up margin audit (their 2-dp
-#: money columns measured 7.1e10 / 3.0e10 at sf1 — within 1.5 decimal
-#: orders of the same flip).  Row counts at the driver SF do not move
-#: → expect_rows=None.
-#:
-#: Round 16 respelled money_sum again (operand-level DECIMAL — §5.3
-#: rule 12, ADVICE r15) WITHOUT pins: the change was verified
-#: output-BIT-IDENTICAL to the r15 spelling on both engines at
-#: sf0.001/0.01/0.1 for all five rule-12 queries before landing
-#: (SCALE.md round-16 ledger), so the green r15 driver rows attest
-#: exactly the values the new code produces — there is no result
-#: delta for a pin to force re-attestation of, and the r16 rotation
-#: budget (r11 tier 3 + r12 tier 48 = 51 > K=50) had zero slack for
-#: cosmetic pins.  The ADVICE r15 stale-checkout hazard is moot for
-#: an output-identical change by construction.
-#:
 #: CONVENTION (round 17, VERDICT r16 #4): any future mid-round
 #: semantics change that is NOT proven output-bit-identical pins with
 #: ``until = N + 1`` where N is the round being built — the pin then
 #: clears on the very next driver attestation instead of holding a
-#: front-of-rotation slot against a stale checkout.  Round 17 itself
-#: adds no pins: the quantile over-cap fallback only changes behavior
-#: past a state cap the driver SFs never trip, and the bench
-#: restructure touches no declared query.
+#: front-of-rotation slot against a stale checkout.
 #:
 #: stream_session / stream_sliding (until r22): round 21 gave the 11
 #: streaming queries DuckDB oracles and dropped the self-check column
@@ -157,13 +115,6 @@ class _Pin:
 #: trivial oracle SQL are pinned; six others already sit in the
 #: stalest (r17) tier.  Row counts do not move → expect_rows=None.
 _PRIORITY: dict[str, _Pin] = {
-    "mm_decode_batch": _Pin(until=13),
-    "sink_merge_upsert": _Pin(until=13),
-    "agg_pricing_summary": _Pin(until=15),
-    "agg_rollup": _Pin(until=15),
-    "join_broadcast": _Pin(until=15),
-    "agg_histogram": _Pin(until=15),
-    "sql_ansi_shared": _Pin(until=15),
     "stream_session": _Pin(until=22),
     "stream_sliding": _Pin(until=22),
 }

@@ -1312,18 +1312,13 @@ def _read_paths(spark, schema, paths: list[str]) -> DataFrame:
     tax repeated per op.
 
     Scale posture: driver-side listing is only a win when per-file
-    metadata calls are cheap (local FS / fast shared FS); on an object
-    store 1000 sequential HEADs would cost far more than one listing
-    job, so the default gates to LOCAL masters only — the same
-    discipline as the loader trim in ``sources/io.py`` and the CC
-    loop's partition trim.  ``spark.analytics.lake.driverListing``
-    overrides: ``always`` (operator knows the FS is fast), ``never``,
-    ``auto`` (default: local masters only).  The conf flip is scoped
-    and restored; it only affects how paths are LISTED, never what is
-    read."""
-    mode = spark.conf.get("spark.analytics.lake.driverListing", "auto")
-    local = spark.sparkContext.master.startswith("local")
-    if mode == "always" or (mode == "auto" and local):
+    metadata calls are cheap (local FS); on an object store 1000
+    sequential HEADs would cost far more than one listing job, so
+    only a ``local*`` master lists on the driver — the same gate as
+    the loader trim in ``sources/io.py`` and the CC loop's partition
+    trim.  The conf flip is scoped and restored; it only affects how
+    paths are LISTED, never what is read."""
+    if spark.sparkContext.master.startswith("local"):
         key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
         prev = spark.conf.get(key, "32")
         try:

@@ -349,17 +349,14 @@ def q_sink_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = t["documents"].select("doc_id", "n_chars", "lang")
     path = _scratch("dyn_overwrite")
     base.write.mode("overwrite").partitionBy("lang").parquet(path)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            base.filter((F.col("lang") == "en") & (F.col("n_chars") >= 200))
-            .write.mode("overwrite")
-            .partitionBy("lang")
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    # Per-write option, not the session conf: nothing session-wide flips.
+    (
+        base.filter((F.col("lang") == "en") & (F.col("n_chars") >= 200))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("lang")
+        .parquet(path)
+    )
     back = spark.read.parquet(path)
     return back.select(
         "doc_id", F.col("lang").cast("string").alias("lang"), "n_chars"

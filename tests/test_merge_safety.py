@@ -1325,16 +1325,15 @@ def test_write_bucketed_skip_shuffle_with_part_spec_raises(spark):
 
 
 def test_driver_listing_auto_stays_distributed_on_non_local_master():
-    """``spark.analytics.lake.driverListing=auto`` keeps listing on the
-    driver only for local masters: on a cluster master string the
-    parallel-discovery threshold is never flipped, however many paths
-    the reader lists (a local master with the same paths does flip it,
-    scoped to the reader build)."""
+    """Explicit-path readers list on the driver only for local masters:
+    on a cluster master string the parallel-discovery threshold is
+    never flipped, however many paths the reader lists (a local master
+    with the same paths does flip it, scoped to the reader build)."""
     key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 
     class FakeConf:
         def __init__(self):
-            self.values = {"spark.analytics.lake.driverListing": "auto"}
+            self.values = {}
             self.sets = []
 
         def get(self, k, default=None):

@@ -802,10 +802,11 @@ def test_cc_step_shares_one_phase1_subtree(spark, tmp_path):
 
 def test_cc_sym_bucketed_join_no_edge_exchange(spark, tmp_path):
     """Round-20 bucketed-sym pin (VERDICT r19 next #1): the materialized
-    symmetrized edge table persists hash(src) bucketing + src order, so
-    a src-keyed sort-merge join against it (broadcast disabled) carries
-    NO Exchange and NO Sort on the edge side — only the label side
-    shuffles, every round, at any label size."""
+    symmetrized edge table persists hash(src) bucketing, so a src-keyed
+    sort-merge join against it (broadcast disabled) carries NO Exchange
+    on the edge side — only the label side shuffles, every round, at
+    any label size.  Each side still has its own Sort: the bucketed
+    scan does not report its sortBy order to the planner."""
     from pyspark_analytics_library_spark.operators.dedup import (
         _cc_materialize_sym,
         _fs_delete,
@@ -815,7 +816,7 @@ def test_cc_sym_bucketed_join_no_edge_exchange(spark, tmp_path):
         [(i % 7, (i * 3) % 7) for i in range(50)], "src long, dst long"
     )
     confs = {
-        "spark.analytics.cc.edgeBuckets": "4",
+        "spark.sql.shuffle.partitions": "4",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.enabled": "false",
     }
@@ -824,7 +825,7 @@ def test_cc_sym_bucketed_join_no_edge_exchange(spark, tmp_path):
         spark.conf.set(k, v)
     scratch = str(tmp_path / "scratch")
     try:
-        sym, drop = _cc_materialize_sym(spark, sym0, scratch)
+        sym, drop = _cc_materialize_sym(spark, sym0, scratch, big_edges=True)
         try:
             lab = spark.range(0, 7).select(
                 F.col("id").alias("v"), F.col("id").alias("label")
@@ -833,9 +834,13 @@ def test_cc_sym_bucketed_join_no_edge_exchange(spark, tmp_path):
             text = joined._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
             assert "SortMergeJoin" in text, text
             assert "SelectedBucketsCount" in text, text
-            # exactly one exchange/sort pair: the label side (on v)
+            # exactly one exchange: the label side (on v)
             assert text.count("Exchange hashpartitioning") == 1, text
             assert "hashpartitioning(v#" in text, text
+            # one Sort per side: the label side's after its exchange,
+            # the edge side's local to each bucket (no exchange under it)
+            assert text.count(" Sort [") == 2, text
+            assert " Sort [src#" in text, text
             assert joined.count() == 50
         finally:
             drop()
@@ -850,7 +855,9 @@ def test_cc_bucketed_sym_table_dropped_when_round0_checkpoint_fails(
 ):
     """ADVICE r20 #3: the bucketed sym layout registers a catalog table;
     a failure right after it is written — here the round-0 label
-    checkpoint — must still drop it, so the catalog gains no table."""
+    checkpoint — must still drop it, so the catalog gains no table.
+    A union-find cap of 1 under 3 edges makes the probe prove the graph
+    big, which is what selects the bucketed layout."""
     import pytest
 
     from pyspark_analytics_library_spark.operators import dedup as dedup_mod
@@ -862,10 +869,20 @@ def test_cc_bucketed_sym_table_dropped_when_round0_checkpoint_fails(
             raise RuntimeError("injected round-0 failure")
         return real_checkpoint(df, scratch_root, round_no)
 
+    real_materialize = dedup_mod._cc_materialize_sym
+    registered = []
+
+    def recording_materialize(spark_, sym, scratch_root, big_edges=False):
+        out = real_materialize(spark_, sym, scratch_root, big_edges=big_edges)
+        registered.extend(
+            t.name for t in spark_.catalog.listTables() if t.name not in before
+        )
+        return out
+
     monkeypatch.setattr(dedup_mod, "_cc_checkpoint", failing_checkpoint)
+    monkeypatch.setattr(dedup_mod, "_cc_materialize_sym", recording_materialize)
     confs = {
-        "spark.analytics.cc.edgeBuckets": "4",
-        "spark.analytics.cc.driverUnionFindMaxEdges": "0",
+        "spark.analytics.cc.driverUnionFindMaxEdges": "1",
         "spark.analytics.scratchDir": str(tmp_path),
     }
     prev = {k: spark.conf.get(k, None) for k in confs}
@@ -880,6 +897,7 @@ def test_cc_bucketed_sym_table_dropped_when_round0_checkpoint_fails(
     finally:
         for k, v in prev.items():
             (spark.conf.set(k, v) if v is not None else spark.conf.unset(k))
+    assert registered, "the bucketed layout registers a catalog table"
     assert {t.name for t in spark.catalog.listTables()} == before
 
 

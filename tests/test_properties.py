@@ -679,6 +679,7 @@ def test_triangle_dense_dispatch_bounded_by_edges(spark, monkeypatch):
 
     from itertools import combinations
 
+    from pyspark_analytics_library_spark.operators import graph as graph_mod
     from pyspark_analytics_library_spark.operators.graph import triangle_census
 
     k6 = spark.createDataFrame(
@@ -696,50 +697,60 @@ def test_triangle_dense_dispatch_bounded_by_edges(spark, monkeypatch):
 
         monkeypatch.setattr(np, "zeros", _no_dense)
         sparse_row = tuple(triangle_census(spark, k6).collect()[0])
+        # Sort-merge adjacency branch: the neighbor sets are over the
+        # broadcast cap too, so the sparse sum must not hint a broadcast.
+        spark.conf.set("spark.analytics.graph.denseMatmulMaxEdges", "0")
+        spark.conf.set("spark.analytics.graph.broadcastNbrsMaxEdges", "0")
+        hints = []
+        real_sum_frame = graph_mod._sparse_triangle_sum_frame
+
+        def _recording_sum_frame(e_dir, nbrs, broadcast_adjacency, v_type):
+            hints.append(broadcast_adjacency)
+            return real_sum_frame(e_dir, nbrs, broadcast_adjacency, v_type)
+
+        monkeypatch.setattr(
+            graph_mod, "_sparse_triangle_sum_frame", _recording_sum_frame
+        )
+        smj_row = tuple(triangle_census(spark, k6).collect()[0])
     finally:
         monkeypatch.undo()
         spark.conf.unset("spark.analytics.graph.denseMatmulMaxEdges")
+        spark.conf.unset("spark.analytics.graph.broadcastNbrsMaxEdges")
     assert sparse_row == expected
+    assert hints == [False]
+    assert smj_row == expected
 
 
-def test_exact_quantile_guard_fails_fast_past_distinct_cap(spark):
-    """VERDICT r15 #2: agg_quantile must refuse with an actionable
-    error naming the sketch path — not a raw JVM OOM — when the
-    estimated concurrent hash-map state (min(distinct × parallelism,
-    rows) × 64 B — the r16 calibration that actually reproduces the
-    ledgered sf≈1 OOM, which a distinct-only cap misses because the
-    distinct count is scale-invariant there) exceeds the conf cap.
-    The fixture trips the guard under a tiny cap; the guard=false
-    switch bypasses the probe entirely."""
-    import pytest
-
-    from pyspark_analytics_library_spark.registry import REGISTRY
+def test_exact_quantile_guard_computes_exactly_past_state_cap(spark):
+    """VERDICT r15 #2 / r16 #7: past the conf cap on the estimated
+    concurrent hash-map state (min(distinct × parallelism, rows) × 64 B
+    — the r16 calibration that actually reproduces the ledgered sf≈1
+    OOM, which a distinct-only cap misses because the distinct count is
+    scale-invariant there), agg_quantile must not OOM: it computes the
+    same exact answer through the bounded-state binned path.  The
+    fixture trips the guard under a tiny cap."""
+    from pyspark_analytics_library_spark.operators.aggregates import (
+        exact_quantile_guard,
+    )
+    from pyspark_analytics_library_spark.sources.io import load_tables
 
     fn = REGISTRY["agg_quantile"].fn
+    lineitem = load_tables(spark, TEST_SF_DIR)["lineitem"]
+    cols = {"l_quantity": 3, "l_extendedprice": 1}
     baseline = sorted(map(tuple, fn(spark, TEST_SF_DIR).collect()))
     spark.conf.set("spark.analytics.quantile.maxLocalStateBytes", "1024")
     try:
-        # Round 17 (VERDICT r16 #7): the DEFAULT over-cap behavior is
-        # now compute-not-refuse — the bounded-state binned path must
-        # return bit-identical rounded results to the native plan.
+        assert exact_quantile_guard(spark, lineitem, cols) == set(cols)
+        # The bounded-state binned path must return bit-identical
+        # rounded results to the native plan.
         assert sorted(map(tuple, fn(spark, TEST_SF_DIR).collect())) == baseline
-        # onOverCap=error restores the r15/r16 refusal with the
-        # actionable message naming both escape hatches.
-        spark.conf.set("spark.analytics.quantile.onOverCap", "error")
-        with pytest.raises(ValueError, match="agg_approx_quantile"):
-            fn(spark, TEST_SF_DIR)
         # The conf parser takes JVM-style size suffixes (ADVICE r16):
         # '12g' must parse as a cap, not crash with a bare int() error.
         spark.conf.set("spark.analytics.quantile.maxLocalStateBytes", "12g")
+        assert exact_quantile_guard(spark, lineitem, cols) == set()
         assert sorted(map(tuple, fn(spark, TEST_SF_DIR).collect())) == baseline
-        spark.conf.set("spark.analytics.quantile.maxLocalStateBytes", "1024")
-        # Bypass switch: plan must build (and run) with the probe off.
-        spark.conf.set("spark.analytics.quantile.guard", "false")
-        assert fn(spark, TEST_SF_DIR).count() > 0
     finally:
         spark.conf.unset("spark.analytics.quantile.maxLocalStateBytes")
-        spark.conf.unset("spark.analytics.quantile.guard")
-        spark.conf.unset("spark.analytics.quantile.onOverCap")
     # Stock cap (256 MB): the fixture estimates a few MB — normal path.
     assert fn(spark, TEST_SF_DIR).count() > 0
 

@@ -21,6 +21,7 @@ PKG = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     "pyspark_analytics_library_spark",
 )
+REPO = os.path.dirname(PKG)
 
 #: repo-relative file → exact count of driver-materialization call
 #: sites (``.collect()`` + ``.toPandas()``).  Every entry is justified
@@ -140,16 +141,12 @@ def test_row_at_a_time_udfs_only_in_the_udf_demo_module():
 #: justifies the new branch.
 CONF_KEYS = {
     "spark.analytics.cc.driverUnionFindMaxEdges",
-    "spark.analytics.cc.edgeBuckets",
     "spark.analytics.describe.selfCheck",
     "spark.analytics.graph.broadcastNbrsMaxEdges",
     "spark.analytics.graph.denseMatmulMaxEdges",
     "spark.analytics.graph.denseMatmulMaxVertices",
     "spark.analytics.graph.sparseMaxWork",
-    "spark.analytics.lake.driverListing",
-    "spark.analytics.quantile.guard",
     "spark.analytics.quantile.maxLocalStateBytes",
-    "spark.analytics.quantile.onOverCap",
     "spark.analytics.scratchDir",
     "spark.analytics.sim.maxIndexBytes",
     "spark.analytics.sink.dvMaxPositions",
@@ -158,14 +155,36 @@ CONF_KEYS = {
 _CONF_LITERAL = re.compile(r"""["'](spark\.analytics\.[A-Za-z0-9_.]+)["']""")
 
 
+def _conf_literals(top: str):
+    """(repo-relative path, ``spark.analytics.*`` string literals) for
+    ``top`` if it is a .py file, else for every .py file under it."""
+    paths = (
+        [top]
+        if top.endswith(".py")
+        else [
+            os.path.join(root, f)
+            for root, _dirs, names in os.walk(top)
+            for f in names
+            if f.endswith(".py")
+        ]
+    )
+    for path in paths:
+        with open(path, encoding="utf-8") as f:
+            yield os.path.relpath(path, REPO), set(_CONF_LITERAL.findall(f.read()))
+
+
 def test_conf_key_inventory_is_pinned():
-    found = set()
-    for root, _dirs, files in os.walk(PKG):
-        for fname in files:
-            if fname.endswith(".py"):
-                with open(os.path.join(root, fname), encoding="utf-8") as f:
-                    found |= set(_CONF_LITERAL.findall(f.read()))
+    found = set().union(*(keys for _, keys in _conf_literals(PKG)))
     assert found == CONF_KEYS, (
         f"spark.analytics.* conf keys changed: added {sorted(found - CONF_KEYS)}, "
         f"removed {sorted(CONF_KEYS - found)}"
     )
+    # Outside the package, setting a key the package does not read is a
+    # silent no-op: a test or example that sets one tests nothing.
+    stale = {
+        path: sorted(keys - CONF_KEYS)
+        for top in ("tests", "examples", "bench.py")
+        for path, keys in _conf_literals(os.path.join(REPO, top))
+        if keys - CONF_KEYS
+    }
+    assert not stale, f"spark.analytics.* keys the package does not read: {stale}"
