@@ -20,7 +20,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pyspark_analytics_library_spark.registry import query
-from pyspark_analytics_library_spark.sources.io import load_tables
+from pyspark_analytics_library_spark.sources.io import load_tables, register_views
 
 
 def _r(col: Column | str, scale: int = 4) -> Column:
@@ -341,7 +341,7 @@ _GROUPING_SETS_SQL = """
 def q_agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPING SETS is SQL-only surface in Spark — entry point B
     (SURVEY.md §3): identical SQL text runs on both engines."""
-    load_tables(spark, sf_dir)  # registers temp views
+    register_views(spark, sf_dir, ("customer", "nation"))
     return spark.sql(_GROUPING_SETS_SQL)
 
 

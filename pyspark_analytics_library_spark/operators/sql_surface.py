@@ -20,15 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from pyspark_analytics_library_spark.registry import query
-from pyspark_analytics_library_spark.sources.io import load_tables
-
-
-def register_views(spark: SparkSession, sf_dir: str, tables: tuple[str, ...]) -> None:
-    """Expose fixture tables as session-scoped temp views under their
-    canonical names so SQL text is portable between engines."""
-    t = load_tables(spark, sf_dir)
-    for name in tables:
-        t[name].createOrReplaceTempView(name)
+from pyspark_analytics_library_spark.sources.io import load_tables, register_views
 
 
 #: One SQL text, two engines: this exact string runs unmodified on

@@ -20,7 +20,7 @@ from pyspark.sql import types as T
 
 from pyspark_analytics_library_spark.functions.coercion import ensure_columns
 from pyspark_analytics_library_spark.registry import query
-from pyspark_analytics_library_spark.sources.io import load_tables
+from pyspark_analytics_library_spark.sources.io import load_tables, register_views
 
 
 def gapply(df: DataFrame, keys, func, schema) -> DataFrame:
@@ -253,7 +253,7 @@ def q_udtf_table_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     relational unnest computes the identical row set; the oracle
     verifies the UDTF *result*, not its mechanism (same stance as the
     udf_* CASE oracles)."""
-    load_tables(spark, sf_dir)
+    register_views(spark, sf_dir, ("documents",))
 
     @F.udtf(returnType="word: string, word_len: int")
     class SplitWords:

@@ -200,23 +200,32 @@ def _normalize_ts(df: DataFrame, col: str = "ts", target: str = "timestamp") -> 
     return df
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, register_views: bool = True
-) -> dict[str, DataFrame]:
-    """Load all fixture tables; optionally register them as temp views.
+def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    """Load all fixture tables as lazy DataFrames.
 
-    Returns a dict of lazy DataFrames.  Cached per (session, sf_dir).
+    Cached per (session, sf_dir), so repeat calls cost a dict lookup.
+    No temp view is registered: the DataFrame-API queries never read
+    one, and the few SQL-text queries call ``register_views`` for the
+    tables they read.
     """
     key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _CACHE:
         _CACHE[key] = {name: load_table(spark, sf_dir, name) for name in TABLES}
-    if register_views:
-        # Re-register on every call: the session-global view names must
-        # track the *requested* sf_dir even when callers alternate
-        # between scale factors (entry() at sf0.001, queries at sf0.01).
-        for name, df in _CACHE[key].items():
-            df.createOrReplaceTempView(name)
     return _CACHE[key]
+
+
+def register_views(spark: SparkSession, sf_dir: str, tables: tuple[str, ...]) -> None:
+    """Expose fixture tables as session-scoped temp views under their
+    canonical names so SQL text is portable between engines.
+
+    The only place the package registers views.  It re-registers on
+    every call so the view names track the requested sf_dir even when
+    callers alternate between scale factors (``entry()`` at sf0.001,
+    the declared queries at sf0.01).
+    """
+    t = load_tables(spark, sf_dir)
+    for name in tables:
+        t[name].createOrReplaceTempView(name)
 
 
 # ---------------------------------------------------------------------------

@@ -435,7 +435,7 @@ def q_stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     and their windows are immediately evicted-and-EMITTED, so nothing
     is ever dropped.  A middle on-time batch ages the filter watermark
     past the late rows before they arrive."""
-    base = load_tables(spark, sf_dir, register_views=False)["events"]
+    base = load_tables(spark, sf_dir)["events"]
     _prune_stale_scratch()
     sf_norm = os.path.normpath(sf_dir)
     # pid-scoped (concurrent processes must not rmtree each other's
@@ -626,7 +626,7 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the static side (only stream-stream joins buffer)."""
     ev = stream_events(spark, sf_dir).withWatermark("ts", "10 minutes")
     static = (
-        load_tables(spark, sf_dir, register_views=False)["events"]
+        load_tables(spark, sf_dir)["events"]
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("lifetime_events"))
     )

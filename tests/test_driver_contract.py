@@ -410,3 +410,37 @@ def test_describe_self_check_conf_switch(spark, monkeypatch):
     finally:
         spark.conf.unset("spark.analytics.describe.selfCheck")
     assert rows_off == rows_on
+
+
+#: Declared queries that run SQL text over temp views.
+SQL_TEXT_QUERIES = (
+    "sql_ansi_shared",
+    "sql_subquery_scalar",
+    "sql_subquery_correlated",
+    "agg_grouping_sets",
+    "join_lateral",
+    "udtf_table_fn",
+)
+
+
+def _drop_fixture_views(spark) -> None:
+    from pyspark_analytics_library_spark.sources.io import TABLES
+
+    for name in TABLES:
+        spark.catalog.dropTempView(name)
+
+
+def test_dataframe_query_registers_no_views(spark):
+    _drop_fixture_views(spark)
+    before = {t.name for t in spark.catalog.listTables()}
+    REGISTRY["agg_pricing_summary"].fn(spark, TEST_SF_DIR).collect()
+    assert {t.name for t in spark.catalog.listTables()} == before
+
+
+@pytest.mark.parametrize("name", SQL_TEXT_QUERIES)
+def test_sql_text_query_registers_the_views_it_reads(spark, oracle, name):
+    """With no fixture view left by an earlier query, each SQL-text
+    query must register the tables it reads itself."""
+    _drop_fixture_views(spark)
+    spec = REGISTRY[name]
+    assert_query_matches_oracle(spec.fn(spark, TEST_SF_DIR), oracle, spec.oracle, name=name)

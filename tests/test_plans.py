@@ -956,3 +956,30 @@ def test_minhash_verify_and_band_exchanges_are_reused(spark):
     reused = re.findall(r"ReusedExchange.*?hashpartitioning\(([a-z_]+)", final)
     assert "band_id" in reused, final
     assert "id_a" in reused or "id_b" in reused, final
+
+
+def test_second_pass_of_short_queries_compiles_no_classes(spark):
+    """``get_spark`` sizes the codegen cache to the library's working
+    set: one pass of these seven short declared queries generates about
+    160 classes, more than Spark's default cache of 100 holds, so with
+    the default every repeated call recompiled everything it generated.
+    A second pass over the same queries, interleaved rather than each
+    repeated back to back, must find every class in the cache."""
+    names = (
+        "join_inner_star",
+        "join_asof",
+        "query_market_share",
+        "agg_pricing_summary",
+        "win_topk_per_group",
+        "ts_sessionize",
+        "text_tfidf",
+    )
+    compiles = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()  # noqa: SLF001
+    )
+    for name in names:
+        REGISTRY[name].fn(spark, TEST_SF_DIR).collect()
+    before = compiles.getCount()
+    for name in names:
+        REGISTRY[name].fn(spark, TEST_SF_DIR).collect()
+    assert compiles.getCount() - before == 0

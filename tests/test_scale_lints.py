@@ -90,11 +90,30 @@ _CALL = re.compile(
     r"\.(?:collect|toPandas|toLocalIterator|first)\(\)|\.(?:take|head)\("
 )
 _PYUDF = re.compile(r"\bF\.udf\(")
+_TEMP_VIEW = re.compile(r"\bcreateOrReplaceTempView\b")
 
 
 def _count_sites(path: str) -> int:
     with open(path, encoding="utf-8") as f:
         return sum(len(_CALL.findall(line)) for line in f)
+
+
+def _package_files_matching(pattern: re.Pattern, allowed: str) -> list[str]:
+    """Package-relative paths of .py files other than ``allowed`` whose
+    source matches ``pattern``."""
+    offenders = []
+    for root, _dirs, files in os.walk(PKG):
+        for fname in files:
+            if not fname.endswith(".py"):
+                continue
+            path = os.path.join(root, fname)
+            rel = os.path.relpath(path, PKG).replace(os.sep, "/")
+            if rel == allowed:
+                continue
+            with open(path, encoding="utf-8") as f:
+                if pattern.search(f.read()):
+                    offenders.append(rel)
+    return offenders
 
 
 def test_driver_materialization_sites_are_whitelisted():
@@ -120,18 +139,7 @@ def test_row_at_a_time_udfs_only_in_the_udf_demo_module():
     Arrow-batched pandas UDFs everywhere EXCEPT operators/udf.py, whose
     whole point is demonstrating the UDF machinery tiers side by side
     (plain / arrow / pandas, each with the same CASE oracle)."""
-    offenders = []
-    for root, _dirs, files in os.walk(PKG):
-        for fname in files:
-            if not fname.endswith(".py"):
-                continue
-            path = os.path.join(root, fname)
-            rel = os.path.relpath(path, PKG).replace(os.sep, "/")
-            if rel == "operators/udf.py":
-                continue
-            with open(path, encoding="utf-8") as f:
-                if _PYUDF.search(f.read()):
-                    offenders.append(rel)
+    offenders = _package_files_matching(_PYUDF, allowed="operators/udf.py")
     assert not offenders, f"row-at-a-time F.udf outside the demo module: {offenders}"
 
 
@@ -188,3 +196,13 @@ def test_conf_key_inventory_is_pinned():
         if keys - CONF_KEYS
     }
     assert not stale, f"spark.analytics.* keys the package does not read: {stale}"
+
+
+def test_temp_views_registered_only_by_the_loader():
+    """``createOrReplaceTempView`` costs a catalog write per table per
+    call, and a view registered by one query can hide a missing
+    registration in another.  ``sources/io.register_views`` is the one
+    place that registers views, called by each SQL-text query with the
+    tables it reads."""
+    offenders = _package_files_matching(_TEMP_VIEW, allowed="sources/io.py")
+    assert not offenders, f"temp views registered outside sources/io.py: {offenders}"

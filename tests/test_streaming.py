@@ -24,7 +24,7 @@ load_all_query_modules()
 
 
 def _events(spark):
-    return load_tables(spark, TEST_SF_DIR, register_views=False)["events"]
+    return load_tables(spark, TEST_SF_DIR)["events"]
 
 
 def test_stream_tumbling_matches_batch(spark):
